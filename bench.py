@@ -347,15 +347,17 @@ def run_one(spark, name: str, sf_dir: str) -> float:
     df = fn(spark, sf_dir)
     df.count()
     dt = time.time() - t0
-    # Measurement-bug fix (r12, documented in OPTIMIZATION_r12.md):
+    # Measurement-bug fix (r12; the drain's history is in CHANGES.md):
     # query-BODY persists (cms/oov/bpe/vocab-overlap term tables) are
     # invocation-scoped, but Spark's CacheManager dedupes by analyzed
     # plan — without draining them here, the second timed pass read the
     # cache built in pass 1 and min-of-two under-reported those rows
     # (r11 record: cms_heavy_hitters 0.29 s vs ~0.7 s honest). The
     # drain runs AFTER the timed action, so each pass pays its full
-    # plan. Session-scoped pair/PQ caches are untouched (their build
-    # cost is adjudicated by the materialize_* entries).
+    # plan, and it blocks until the blocks are freed, so the cleanup
+    # stays out of the next query's timed window. Session-scoped pair/PQ
+    # caches are untouched (their build cost is adjudicated by the
+    # materialize_* entries).
     cache_scope.drain()
     return dt
 

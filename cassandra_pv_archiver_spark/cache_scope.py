@@ -27,10 +27,10 @@ _LOG: list[DataFrame] = []
 
 
 def persist_scoped(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for the next :func:`drain`."""
-    df.persist()
-    _LOG.append(df)
-    return df
+    """Persist ``df`` and register it for the next :func:`drain` —
+    unless the caller already cached it (:func:`persist_logged`'s
+    guard: the owner of that cache manages its lifetime)."""
+    return persist_logged(df)
 
 
 def persist_logged(df: DataFrame, cache_log: list | None = None) -> DataFrame:
@@ -50,11 +50,13 @@ def persist_logged(df: DataFrame, cache_log: list | None = None) -> DataFrame:
 
 
 def drain() -> int:
-    """Unpersist every registered DataFrame; returns how many."""
+    """Unpersist every registered DataFrame; returns how many. Blocks
+    until the cached blocks are freed, so the cleanup cannot spill into
+    whatever the caller times next."""
     n = len(_LOG)
     for df in _LOG:
         try:
-            df.unpersist()
+            df.unpersist(blocking=True)
         except Exception:  # noqa: BLE001 — a dead session has nothing to free
             pass
     _LOG.clear()

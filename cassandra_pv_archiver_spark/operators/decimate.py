@@ -544,9 +544,14 @@ def reaggregate(
     )
     # every one of these sums can exceed 2^53 (weights carry the frac scale)
     swd = big_to_double("_sw")
-    grid_mean = f"({big_to_double('_swm')} / {swd} / CAST({rs} AS DOUBLE))"
+    # a window whose source weights all quantize to 0 (every covered
+    # fraction below 0.5·10^-r, e.g. a first sample 1 ns before the
+    # window end) has no weighted mean: NULL, as the DuckDB oracle's
+    # division gives — never an ANSI divide-by-zero abort of the job
+    wd = f"nullif({swd}, 0.0D)"
+    grid_mean = f"({big_to_double('_swm')} / {wd} / CAST({rs} AS DOUBLE))"
     grid_var = (
-        f"({big_to_double('_swm2')} / {swd} / CAST({rs * rs} AS DOUBLE)"
+        f"({big_to_double('_swm2')} / {wd} / CAST({rs * rs} AS DOUBLE)"
         f" - {grid_mean} * {grid_mean})"
     )
     grid_std = f"sqrt(greatest({grid_var}, 0.0D))"

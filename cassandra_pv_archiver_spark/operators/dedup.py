@@ -78,21 +78,16 @@ def jaccard_pairs(
     could land on decimal ties where engines disagree).
     Returns: id_a, id_b (a < b), jaccard, n_common.
     """
-    # persist FIRST (r12, guide §7.2): the guard's distinct-count was a
-    # pure-overhead pass over the uncached shingle explode, and the main
-    # plan then re-ran the explode for sizes + both self-join sides; the
-    # persist turns the guard job into the cache-population pass
-    sh = _persist_logged(sh, cache_log)
-    if max_docs is not None:
-        n_docs = sh.select(id_col).distinct().count()
-        if n_docs > max_docs:
-            raise ValueError(
-                f"jaccard_pairs: {n_docs} documents; the all-shared-shingle "
-                f"pair join is quadratic in per-shingle doc frequency and is "
-                f"capped at {max_docs} docs as an oracle baseline. Use "
-                "dedup.minhash_lsh_pairs (banded MinHash) for large corpora, "
-                "or pass max_docs=None to override deliberately."
-            )
+    sh = _persist_guarded(
+        sh, id_col, max_docs, cache_log,
+        lambda n_docs: (
+            f"jaccard_pairs: {n_docs} documents; the all-shared-shingle "
+            f"pair join is quadratic in per-shingle doc frequency and is "
+            f"capped at {max_docs} docs as an oracle baseline. Use "
+            "dedup.minhash_lsh_pairs (banded MinHash) for large corpora, "
+            "or pass max_docs=None to override deliberately."
+        ),
+    )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -162,6 +157,27 @@ def _persist_logged(df: DataFrame, cache_log: list | None) -> DataFrame:
     from ..cache_scope import persist_logged
 
     return persist_logged(df, cache_log)
+
+
+def _persist_guarded(
+    sh: DataFrame, id_col: str, max_docs: int | None,
+    cache_log: list | None, refusal,
+) -> DataFrame:
+    """Persist the shingle table, then enforce the exact baselines'
+    ``max_docs`` cap. Persist FIRST (r12, guide §7.2): the guard's
+    distinct count doubles as the cache-population pass that sizes and
+    both self-join sides then read. A refused call releases the persist
+    it made before raising ``ValueError(refusal(n_docs))``, so the
+    refusal leaves no cached blocks behind."""
+    owned = not sh.is_cached
+    sh = _persist_logged(sh, cache_log)
+    if max_docs is not None:
+        n_docs = sh.select(id_col).distinct().count()
+        if n_docs > max_docs:
+            if owned:
+                sh.unpersist(blocking=True)
+            raise ValueError(refusal(n_docs))
+    return sh
 
 
 def minhash_lsh_pairs(
@@ -822,17 +838,14 @@ def containment_pairs(
     Returns: id_small (the contained side), id_big, containment,
     jaccard, n_common.
     """
-    # persist FIRST (r12): see jaccard_pairs — the guard pass populates
-    # the cache that sizes + both self-join sides then read
-    sh = _persist_logged(sh, cache_log)
-    if max_docs is not None:
-        n_docs = sh.select(id_col).distinct().count()
-        if n_docs > max_docs:
-            raise ValueError(
-                f"containment_pairs: {n_docs} documents exceeds the "
-                f"{max_docs}-doc cap of the exact baseline; use "
-                "containment_lsh_pairs (bottom-k probe banding) at scale."
-            )
+    sh = _persist_guarded(
+        sh, id_col, max_docs, cache_log,
+        lambda n_docs: (
+            f"containment_pairs: {n_docs} documents exceeds the "
+            f"{max_docs}-doc cap of the exact baseline; use "
+            "containment_lsh_pairs (bottom-k probe banding) at scale."
+        ),
+    )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")

@@ -13,6 +13,30 @@ The high-water mark read prunes to the newest date partition; the source
 scan is bounded below by the as-of seed timestamp, so steady-state
 incremental runs scan hours of data, not years — the run cost is
 O(new data), independent of archive size.
+
+Per micro-batch the cost is set by fixed per-job latency, not data, so
+an edge spends Spark jobs only where they can produce output:
+
+* **Driver-resident metadata.** The per-level hwm and seed tables are
+  read once per manifest version into driver memory
+  (:meth:`ArchiveStore.hwm_values` / :meth:`ArchiveStore.seed_values`),
+  and their DataFrame views are local relations. Every metadata
+  decision of an edge (seed source-level tag, scan bounds, newcomer and
+  no-hwm channel sets) is plain Python; reading a version not yet
+  cached is one scan job.
+* **Closure gate** (:func:`can_close_window`). Before any data scan the
+  edge decides on the driver whether some channel can close a target
+  window; if none can, it returns 0 without running a job. A channel
+  the edge has never seeded is judged by the source level's low-water
+  mark (its min t, kept beside the hwm in the same log). The
+  reference keeps its carry state in memory and emits an interval only
+  once a source sample at or after its end exists (W3), so an edge
+  that cannot emit costs it nothing either.
+
+Budget: an edge that cannot close a window runs at most one job per
+metadata version it has not read yet (in steady state at most two: the
+seed table it wrote last time and a source hwm no other reader has
+touched), and usually none.
 """
 
 from __future__ import annotations
@@ -20,6 +44,7 @@ from __future__ import annotations
 import contextlib
 import threading
 import weakref
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,8 +89,10 @@ def incremental_decimation(
     validity crosses that point. The seed selection is pure dataflow — keep
     rows whose ``lead(t)`` passes ``hwm_c + period`` — so there are no
     driver-side probes and channels at different progress catch up in one
-    job. The source scan is bounded below by ``min(hwm)`` over channels
-    (from the tiny metadata table), so steady-state cost is O(new data).
+    job. The source scan is bounded below by the oldest persisted seed
+    (from the tiny metadata table), so steady-state cost is O(new data),
+    and an edge whose channels cannot close a window returns before any
+    scan (:func:`can_close_window`).
 
     Returns the number of newly materialized intervals; idempotent until
     new source data arrives (W3).
@@ -160,6 +187,51 @@ def _edge_lease(store: ArchiveStore, target_period_s: int, ttl_s: float):
         raise EdgeLeaseHeld(str(e)) from None
 
 
+def can_close_window(
+    period_ns: int,
+    hwm: Mapping[str, int],
+    src_hwm: Mapping[str, int],
+    seed_min_t: Mapping[str, int],
+    src_lwm: Mapping[str, int | None],
+) -> bool:
+    """Closure gate: can a run of the edge emit any interval?
+
+    Window ``w`` closes once a source sample at or after its end exists
+    (:func:`~..operators.decimate.explode_validity_windows`: ``(w+1)·P
+    <= the channel's source max t``). Per source channel ``c`` with
+    source hwm ``s_c``:
+
+    * with a target hwm ``h_c`` (the start of its last emitted window),
+      the next window ``[h_c + P, h_c + 2P)`` closes iff
+      ``h_c + 2P <= s_c``;
+    * without one, its first window starts at ``floor(m_c / P)·P`` and
+      closes iff ``floor(m_c / P)·P + P <= s_c``, with ``m_c`` the
+      channel's min seed t (young channels keep every row in the seed
+      state) or, for a channel never seeded, its source low-water mark
+      — a lower bound on its oldest source t, so the test can only err
+      towards running. A channel with neither must run.
+
+    Python ints floor-divide exactly, so the test holds for any signed
+    ns. A source row whose data commit landed but whose hwm commit did
+    not is invisible here until the next append or heal moves ``s_c``
+    past it — a delay, never a loss: the run that follows rescans
+    storage from the oldest seed."""
+    for c, s in src_hwm.items():
+        if s is None:
+            continue
+        h = hwm.get(c)
+        if h is not None:
+            if h + 2 * period_ns <= s:
+                return True
+            continue
+        m = seed_min_t.get(c)
+        if m is None:
+            m = src_lwm.get(c)
+        if m is None or m // period_ns * period_ns + period_ns <= s:
+            return True
+    return False
+
+
 def _incremental_decimation_locked(
     store: ArchiveStore,
     target_period_s: int,
@@ -169,70 +241,56 @@ def _incremental_decimation_locked(
     period_ns = target_period_s * NS
     if source_level is None:
         source_level = pick_source_level(store.levels(), target_period_s)
+    # edge metadata is driver-resident, read once per manifest version:
+    # the frames feed the broadcast joins, the values every decision
+    # below — none of it runs a Spark job on a cached version
     hwm_df = store.channel_hwm(target_period_s)
     state = store.read_seed_state(target_period_s)
+    hwm = store.hwm_values(target_period_s) or {}
+    src_hwm = store.hwm_values(source_level) or {}
+    seeds = store.seed_values(target_period_s) or {}
     # seed state is only meaningful for the source level it was derived
     # from: after a topology change (an intermediate level appears and
     # pick_source_level switches edges) the persisted rows have the OTHER
     # level's schema — unioning them would crash every subsequent run.
     # Discard mismatched (or legacy untagged) state: the scan falls back
     # to a one-time full rescan and the hwm filter keeps outputs exact.
-    prev_src_hwm = None  # the source hwm the persisted seeds were built at
-    if state is not None:
-        if "_src_level" in state.columns:
-            tag = state.select(
-                "_src_level",
-                *(
-                    ["_src_hwm"]
-                    if "_src_hwm" in state.columns
-                    else []
-                ),
-            ).first()
-            if tag is None or tag._src_level != source_level:
-                state = None
-            else:
-                prev_src_hwm = getattr(tag, "_src_hwm", None)
-                state = state.drop("_src_level", "_src_hwm")
-        else:
-            state = None
-    # one tiny metadata read serves the newcomer walk, the idle-run
-    # detection tag, and nothing else — never a data scan
-    src_hwm_df = store.channel_hwm(source_level)
-    src_hwm_max = None
-    if src_hwm_df is not None:
-        row = src_hwm_df.agg(F.max("hwm").alias("m")).first()
-        src_hwm_max = row.m if row is not None else None
+    tags = seeds.get("_src_level")
+    seed_min_t: dict = {}
+    if state is not None and tags and tags[0] == source_level:
+        state = state.drop("_src_level")
+        for c, t in zip(seeds["channel"], seeds["t"]):
+            if c not in seed_min_t or t < seed_min_t[c]:
+                seed_min_t[c] = t
+        src_lwm = store.lwm_values(source_level) or {}
+        if not can_close_window(
+            period_ns, hwm, src_hwm, seed_min_t, src_lwm
+        ):
+            # nothing can close: the run would emit no interval, and
+            # its seed rewrite is unneeded — the next run rescans
+            # storage from the oldest seed, so it sees every row
+            # appended meanwhile
+            return 0
+    else:
+        state = None
 
     if hwm_df is None:
         src_all = store.read_samples(source_level)
     else:
         # scan bound: nothing older than the oldest persisted seed is ever
         # needed — steady-state incremental cost is O(new data).
-        lo = None
-        if state is not None:
-            lo_row = state.agg(F.min("t").alias("m")).first()
-            lo = lo_row.m if lo_row is not None else None
+        lo = min(seed_min_t.values(), default=None)
         scan = store.read_samples(source_level, lo_ns=lo)
-        if state is not None and lo is not None:
+        if lo is not None:
             # channels this edge has never seeded can carry history OLDER
             # than the scan bound (a newly onboarded channel arriving with
-            # a backlog): scan their FULL history, channel-pruned. The
-            # channel sets come from the two tiny metadata tables — a
-            # bounded driver-side set difference, not a data scan.
-            if src_hwm_df is not None:
-                known = {
-                    r.channel
-                    for r in state.select("channel").distinct().collect()
-                }
-                newcomers = sorted(
-                    r.channel
-                    for r in src_hwm_df.select("channel").collect()
-                    if r.channel not in known
+            # a backlog): scan their FULL history, channel-pruned — a
+            # driver-side set difference, not a data scan.
+            newcomers = sorted(c for c in src_hwm if c not in seed_min_t)
+            if newcomers:
+                scan = scan.unionByName(
+                    store.read_samples(source_level, channels=newcomers)
                 )
-                if newcomers:
-                    scan = scan.unionByName(
-                        store.read_samples(source_level, channels=newcomers)
-                    )
         if state is not None:
             # allowMissingColumns: a source-level ADD COLUMN evolution
             # after these seeds were persisted would otherwise crash
@@ -275,25 +333,15 @@ def _incremental_decimation_locked(
         lo_t = None
         no_hwm_channels = []
         if hwm_df is not None:
-            lo_row = hwm_df.agg(F.min("hwm").alias("m")).first()
-            lo_t = lo_row.m if lo_row is not None else None
+            lo_t = min(hwm.values(), default=None)
             # a channel whose FIRST-ever decimated window was orphaned
             # (data manifest committed, hwm manifest not) has NO hwm row
             # at all, so its orphans can sit BELOW min(hwm) of the other
             # channels and the bounded slice above lo_t would miss them —
             # the replay would re-append them as permanent duplicates.
             # Widen to full history for exactly those channels,
-            # channel-pruned (a driver-side set difference over the two
-            # tiny hwm metadata tables, normally empty).
-            if src_hwm_df is not None:
-                with_hwm = {
-                    r.channel for r in hwm_df.select("channel").collect()
-                }
-                no_hwm_channels = sorted(
-                    r.channel
-                    for r in src_hwm_df.select("channel").collect()
-                    if r.channel not in with_hwm
-                )
+            # channel-pruned (normally empty).
+            no_hwm_channels = sorted(c for c in src_hwm if c not in hwm)
         existing = store.read_samples(target_period_s, lo_ns=lo_t).select(
             "channel", "t"
         )
@@ -312,8 +360,7 @@ def _incremental_decimation_locked(
         dec = dec.persist()
         try:
             return _publish_decimation(
-                store, dec, src_all, target_period_s, source_level,
-                period_ns, state, prev_src_hwm, src_hwm_max,
+                store, dec, src_all, target_period_s, source_level, period_ns
             )
         finally:
             dec.unpersist()
@@ -322,8 +369,7 @@ def _incremental_decimation_locked(
 
 
 def _publish_decimation(
-    store, dec, src_all, target_period_s, source_level, period_ns,
-    state, prev_src_hwm, src_hwm_max,
+    store, dec, src_all, target_period_s, source_level, period_ns
 ) -> int:
     n = dec.count()
     if n:
@@ -331,20 +377,6 @@ def _publish_decimation(
     # persist the next run's seeds: latest source row at/before each
     # channel's new next-interval start (the reference's decimator
     # carry state, `...DecimatedSamplesDecimationLevel.java:1127-1146`)
-    # idle-run fast path: nothing materialized AND the source hwm is
-    # exactly where the persisted seeds were built -> the recompute
-    # would rewrite byte-identical seeds (plus a manifest commit and
-    # gc) on every empty micro-batch; skip it. Crash-orphaned source
-    # rows (data committed, hwm not) are picked up as soon as the
-    # next source append bumps the hwm — the seed recompute rescans
-    # storage, not a delta.
-    if (
-        n == 0
-        and state is not None
-        and prev_src_hwm is not None
-        and prev_src_hwm == src_hwm_max
-    ):
-        return 0
     new_hwm = store.channel_hwm(target_period_s)
     if new_hwm is not None:
         cols = src_all.columns
@@ -370,13 +402,8 @@ def _publish_decimation(
         # window from its tail rows only once it finally closed).
         # Bounded: no completed window ⇒ the rows span < ~2 periods.
         young = j.filter(F.col("hwm").isNull()).select(*cols)
-        seeds = (
-            mature.unionByName(young)
-            .withColumn("_src_level", F.lit(source_level))
-            .withColumn(
-                "_src_hwm",
-                F.lit(src_hwm_max).cast("long"),  # idle-run tag
-            )
+        seeds = mature.unionByName(young).withColumn(
+            "_src_level", F.lit(source_level)
         )
         store.write_seed_state(target_period_s, seeds)
     return n

@@ -33,8 +33,12 @@ consistent for any ns value (no TimestampType round-trip).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+from types import MappingProxyType
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .fs import HadoopFS
 from .manifest import ManifestTable
@@ -49,6 +53,13 @@ DEC_SCHEMA = (
     "channel string, t long, mean double, std double, vmin double,"
     " vmax double, covered_fraction double, severity int, status int,"
     " n_samples long, quality string"
+)
+#: per-level high-water-mark append-log: each channel's max t and its
+#: low-water mark ``lwm`` (min t; NULL in logs written before it existed)
+HWM_SCHEMA = "channel string, hwm long, lwm long"
+#: the public (channel, hwm) view of the folded log
+_HWM_STRUCT = StructType(
+    [StructField("channel", StringType()), StructField("hwm", LongType())]
 )
 
 
@@ -66,6 +77,27 @@ def _date_expr(t_col: str = "t"):
         F.expr(f"date_add(DATE '1970-01-01', CAST({day} AS INT))"),
         "yyyy-MM-dd",
     )
+
+
+class _MetaSnapshot:
+    """One version of a metadata table held on the driver: the Arrow
+    rows, their Spark schema and a read-only mapping of Python
+    ``values`` derived from them. :meth:`frame` is the DataFrame view,
+    an Arrow-built ``LocalRelation`` made on first use: broadcasts and
+    aggregates over it plan and run without a scan job."""
+
+    __slots__ = ("table", "schema", "values", "_frame")
+
+    def __init__(self, table, schema: StructType, values):
+        self.table = table
+        self.schema = schema
+        self.values = values
+        self._frame = None
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        if self._frame is None:
+            self._frame = spark.createDataFrame(self.table, self.schema)
+        return self._frame
 
 
 class ArchiveStore:
@@ -96,6 +128,9 @@ class ArchiveStore:
         #: cache forever because manifests and data files are both
         #: immutable (manifest.py contract)
         self._schema_cache: dict = {}
+        #: driver-resident hwm/seed metadata: table root -> (manifest
+        #: version, _MetaSnapshot), see :meth:`_snapshot`
+        self._meta_cache: dict = {}
 
     # -- schema evolution (ADD COLUMN) ------------------------------------
     def level_schema(self, level: int, at_version: int | None = None):
@@ -122,8 +157,6 @@ class ArchiveStore:
         reference's pendant: a new per-sample metadata field arriving in
         mid-history — Cassandra's sparse rows return null for cells
         written before the column existed)."""
-        from pyspark.sql.types import StructType
-
         table = self._level_table(level)
         version = (
             at_version if at_version is not None else table.current_version()
@@ -273,17 +306,18 @@ class ArchiveStore:
     HWM_COMPACT_THRESHOLD = 16
 
     def _update_channel_hwm(self, batch: DataFrame, level: int) -> None:
-        """APPEND the batch's per-channel maxima to the HWM log — no
-        read-merge-rewrite of the whole table on the hot write path (the
-        round-1 coalesce(1) overwrite was O(#channels) per batch and
-        local-FS-only). Readers fold the log with a groupBy max; the log
-        is compacted in place once it passes ``HWM_COMPACT_THRESHOLD``
-        files (one listStatus RPC to check)."""
+        """APPEND the batch's per-channel maxima (and minima, the
+        low-water marks) to the HWM log — no read-merge-rewrite of the
+        whole table on the hot write path (the round-1 coalesce(1)
+        overwrite was O(#channels) per batch and local-FS-only). Readers
+        fold the log per channel; the log is compacted in place once it
+        passes ``HWM_COMPACT_THRESHOLD`` files (one listStatus RPC to
+        check)."""
         table = self._hwm_table(level)
         stage = table.stage_dir()
-        batch.groupBy("channel").agg(F.max("t").alias("hwm")).write.parquet(
-            stage
-        )
+        batch.groupBy("channel").agg(
+            F.max("t").alias("hwm"), F.min("t").alias("lwm")
+        ).write.parquet(stage)
         table.publish_stage(stage)
         if len(table.files() or []) > self.HWM_COMPACT_THRESHOLD:
             self._compact_hwm(level)
@@ -302,10 +336,8 @@ class ArchiveStore:
     def _compact_hwm(self, level: int) -> None:
         table = self._hwm_table(level)
         old = table.files() or []
-        folded = (
-            self.spark.read.parquet(*table.paths())
-            .groupBy("channel")
-            .agg(F.max("hwm").alias("hwm"))
+        folded = _fold_hwm_log(
+            self.spark.read.schema(HWM_SCHEMA).parquet(*table.paths())
         )
         stage = table.stage_dir()
         folded.coalesce(1).write.parquet(stage)
@@ -314,54 +346,141 @@ class ArchiveStore:
         table.publish_stage(stage, remove=old)
         table.gc(keep_versions=self.keep_versions)
 
-    def _localize(self, df: DataFrame) -> DataFrame:
-        """Materialize a BOUNDED metadata table into a driver-local
-        relation. Metadata reads must be snapshots: lazy plans would pin
-        parquet file listings that a concurrent append/compact/swap
-        invalidates mid-job (observed as FILE_NOT_EXIST task failures).
-        Both metadata tables are O(#channels) rows — the reference holds
-        the same state in memory (`ChannelMetaDataDAOImpl.java:2111-2123`),
-        so a driver-side copy is the faithful cost."""
-        rows = df.collect()
-        return self.spark.createDataFrame(rows, df.schema)
+    def _snapshot(self, table: ManifestTable, read) -> _MetaSnapshot | None:
+        """The driver-resident copy of a BOUNDED metadata table's current
+        version, or None if the table has never been written.
+
+        ``read(paths, version)`` runs once per manifest version (one
+        scan job) and returns a :class:`_MetaSnapshot`; every later call
+        at that version is served from memory — manifests are
+        immutable, so a version's contents never change. Metadata reads
+        must be snapshots anyway: lazy plans would pin parquet file
+        listings that a concurrent append/compact/swap invalidates
+        mid-job (observed as FILE_NOT_EXIST task failures). Both
+        metadata tables are O(#channels) rows — the reference holds the
+        same state in memory (`ChannelMetaDataDAOImpl.java:2111-2123`).
+        One entry per table: a newer version replaces the older one."""
+        version = table.current_version()
+        if version is None:
+            return None
+        hit = self._meta_cache.get(table.root)
+        if hit is not None and hit[0] == version:
+            return hit[1]
+        paths = table.paths(version)
+        if not paths:
+            return None
+        snap = read(paths, version)
+        hit = self._meta_cache.get(table.root)
+        if hit is None or hit[0] < version:
+            self._meta_cache[table.root] = (version, snap)
+        return snap
+
+    def _hwm_snapshot(self, level: int) -> _MetaSnapshot | None:
+        def read(paths, _version):
+            import pyarrow.compute as pc
+
+            log = self.spark.read.schema(HWM_SCHEMA).parquet(*paths).toArrow()
+            # fold the append-log on the driver: O(#channels x #appends)
+            # rows, so one scan job and no shuffle stage
+            folded = log.group_by("channel").aggregate([
+                ("hwm", "max"),
+                ("lwm", "min"),
+                ("lwm", "count", pc.CountOptions(mode="only_null")),
+            ])
+            chans = folded.column("channel").to_pylist()
+            hwm = folded.column("hwm_max").to_pylist()
+            # a log entry without lwm (an older log) leaves the channel's
+            # lwm unknown: the min over the rest could be too high
+            lwm = [
+                None if nulls else m for m, nulls in zip(
+                    folded.column("lwm_min").to_pylist(),
+                    folded.column("lwm_count").to_pylist(),
+                )
+            ]
+            view = folded.select(["channel", "hwm_max"]).rename_columns(
+                ["channel", "hwm"]
+            )
+            return _MetaSnapshot(view, _HWM_STRUCT, MappingProxyType({
+                "hwm": MappingProxyType(dict(zip(chans, hwm))),
+                "lwm": MappingProxyType(dict(zip(chans, lwm))),
+            }))
+
+        return self._snapshot(self._hwm_table(level), read)
 
     def channel_hwm(self, level: int) -> DataFrame | None:
         """Per-channel high-water mark snapshot ``(channel, hwm)`` for one
-        level, or None if the level has never been written. Folds the
-        append-log (one small job over O(#channels x #appends) rows)."""
-        paths = self._hwm_table(level).paths()
-        if not paths:
-            return None
-        return self._localize(
-            self.spark.read.parquet(*paths)
-            .groupBy("channel")
-            .agg(F.max("hwm").alias("hwm"))
-        )
+        level, or None if the level has never been written. A
+        driver-local relation over :meth:`hwm_values` — broadcasting or
+        aggregating it runs no scan."""
+        snap = self._hwm_snapshot(level)
+        return None if snap is None else snap.frame(self.spark)
+
+    def hwm_values(self, level: int) -> Mapping[str, int] | None:
+        """The same snapshot as :meth:`channel_hwm` as a read-only
+        ``{channel: hwm}`` mapping (None if the level has never been
+        written); free once the manifest version has been read."""
+        snap = self._hwm_snapshot(level)
+        return None if snap is None else snap.values["hwm"]
+
+    def lwm_values(self, level: int) -> Mapping[str, int | None] | None:
+        """Per-channel low-water marks of the same snapshot: a lower
+        bound on the channel's oldest t at ``level`` (retention can only
+        raise the true minimum), None where a log entry predates lwm
+        recording. None if the level has never been written."""
+        snap = self._hwm_snapshot(level)
+        return None if snap is None else snap.values["lwm"]
 
     # -- decimation carry state (T3 seeds) -------------------------------
-    def _seed_path(self, level: int) -> str:
-        return f"{self.root}/meta/seed_level={level}"
+    def _seed_table(self, level: int) -> ManifestTable:
+        return ManifestTable(self.spark, f"{self.root}/meta/seed_level={level}")
+
+    def _seed_snapshot(self, target_level: int) -> _MetaSnapshot | None:
+        table = self._seed_table(target_level)
+
+        def read(paths, version):
+            reader = self.spark.read
+            ddl = table.header(version)
+            if ddl is not None:  # seed tables written before headers infer
+                reader = reader.schema(StructType.fromDDL(ddl))
+            # ``_src_hwm``: the idle-run tag older cascades wrote
+            df = reader.parquet(*paths).drop("_src_hwm")
+            arrow = df.toArrow()
+            values = MappingProxyType(
+                {k: tuple(v) for k, v in arrow.to_pydict().items()}
+            )
+            return _MetaSnapshot(arrow, df.schema, values)
+
+        return self._snapshot(table, read)
 
     def read_seed_state(self, target_level: int) -> DataFrame | None:
         """Per-channel seed rows persisted by the last incremental
         decimation run targeting ``target_level`` (the decimator carry
-        state — one full source row per channel)."""
-        paths = ManifestTable(self.spark, self._seed_path(target_level)).paths()
-        if not paths:
-            return None
-        return self._localize(self.spark.read.parquet(*paths))
+        state — one full source row per channel), as a driver-local
+        relation."""
+        snap = self._seed_snapshot(target_level)
+        return None if snap is None else snap.frame(self.spark)
+
+    def seed_values(self, target_level: int) -> Mapping[str, tuple] | None:
+        """The same snapshot as :meth:`read_seed_state` as read-only
+        columns ``{column: values}`` (None if never written)."""
+        snap = self._seed_snapshot(target_level)
+        return None if snap is None else snap.values
 
     def write_seed_state(
         self, target_level: int, seeds: DataFrame
     ) -> tuple[ManifestTable, list[str], list[str]]:
-        """Replace the seed table in one commit. Returns
-        ``(table, added, removed)`` so a compensating caller
+        """Replace the seed table in one commit. The manifest header
+        records the rows' schema, so reads need no inference job.
+        Returns ``(table, added, removed)`` so a compensating caller
         (:meth:`delete_channel`) can journal the swap for undo."""
-        table = ManifestTable(self.spark, self._seed_path(target_level))
+        table = self._seed_table(target_level)
         old = table.files() or []
         stage = table.stage_dir()
         seeds.coalesce(1).write.parquet(stage)
-        added = table.publish_stage(stage, remove=old)
+        ddl = _ddl((f.name, f.dataType.simpleString()) for f in seeds.schema)
+        added = table.publish_stage(
+            stage, remove=old, header_fn=lambda _prev: ddl
+        )
         table.gc(keep_versions=self.keep_versions)
         return table, added, old
 
@@ -1096,13 +1215,9 @@ class ArchiveStore:
             htable = self._hwm_table(level)
             hpaths = htable.paths()
             if hpaths:
-                hdf = self.spark.read.parquet(*hpaths)
+                hdf = self.spark.read.schema(HWM_SCHEMA).parquet(*hpaths)
                 if hit or _mentions(hdf):
-                    folded = (
-                        meta_transform(hdf)
-                        .groupBy("channel")
-                        .agg(F.max("hwm").alias("hwm"))
-                    )
+                    folded = _fold_hwm_log(meta_transform(hdf))
                     hstage = htable.stage_dir()
                     folded.coalesce(1).write.parquet(hstage)
                     hold = htable.files() or []
@@ -1263,7 +1378,6 @@ def _union_header_fn(batch_fields: list[tuple[str, str]], legacy=None):
 
     ``legacy`` (a StructType or None) seeds the base when the previous
     manifest predates headers."""
-    from pyspark.sql.types import StructType
 
     def _header_fn(prev: str | None) -> str:
         if prev is not None:
@@ -1292,9 +1406,25 @@ def _union_header_fn(batch_fields: list[tuple[str, str]], legacy=None):
                     "this writer's pre-check; type changes are not "
                     "supported — add a NEW column instead)"
                 )
-        return ", ".join(f"`{n}` {t}" for n, t in merged)
+        return _ddl(merged)
 
     return _header_fn
+
+
+def _fold_hwm_log(log: DataFrame) -> DataFrame:
+    """One row per channel of an hwm append-log: max hwm and min lwm —
+    NULL lwm when any entry lacks one, as in the driver-side fold."""
+    return log.groupBy("channel").agg(
+        F.max("hwm").alias("hwm"),
+        F.expr("CASE WHEN count(lwm) = count(1) THEN min(lwm) END").alias(
+            "lwm"
+        ),
+    )
+
+
+def _ddl(fields) -> str:
+    """``(name, type)`` pairs -> the DDL a manifest header records."""
+    return ", ".join(f"`{n}` {t}" for n, t in fields)
 
 
 def _file_date(rel_path: str) -> str | None:

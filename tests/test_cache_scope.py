@@ -84,3 +84,53 @@ def test_registry_persist_sites_register_with_cache_scope(spark, tmp_path):
     assert cache_scope.drain() >= 1
     q_bpe_tokenize_audit(spark, sf).count()
     assert cache_scope.drain() >= 1
+
+
+class _SpyFrame:
+    """Records how :func:`cache_scope.drain` unpersists it."""
+
+    def __init__(self, cached: bool = False):
+        self.is_cached = cached
+        self.unpersist_calls: list[bool] = []
+
+    def persist(self):
+        self.is_cached = True
+        return self
+
+    def unpersist(self, blocking: bool = False):
+        self.unpersist_calls.append(blocking)
+        self.is_cached = False
+        return self
+
+
+def test_drain_unpersists_blocking():
+    """drain() must wait for the blocks to be freed: a non-blocking
+    unpersist lets the cleanup run inside the next timed query."""
+    from cassandra_pv_archiver_spark import cache_scope
+
+    cache_scope.drain()
+    spy = cache_scope.persist_scoped(_SpyFrame())
+    assert cache_scope.drain() == 1
+    assert spy.unpersist_calls == [True]
+
+
+def test_persist_scoped_leaves_caller_cache_alone(spark):
+    """A DataFrame the caller already cached is neither re-persisted nor
+    registered, so a drain cannot unpersist it out from under its
+    owner."""
+    from cassandra_pv_archiver_spark import cache_scope
+
+    cache_scope.drain()
+    spy = _SpyFrame(cached=True)
+    assert cache_scope.persist_scoped(spy) is spy
+    assert cache_scope.drain() == 0
+    assert spy.unpersist_calls == []
+
+    owned = spark.range(10).selectExpr("id * 3 AS x").persist()
+    owned.count()
+    mine = spark.range(10).selectExpr("id * 5 AS x")
+    assert cache_scope.persist_scoped(owned) is owned
+    cache_scope.persist_scoped(mine)
+    assert cache_scope.drain() == 1
+    assert owned.is_cached and not mine.is_cached
+    owned.unpersist(blocking=True)

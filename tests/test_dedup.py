@@ -219,6 +219,35 @@ def test_exact_jaccard_guard_refuses_large_corpus(spark):
     assert dedup.jaccard_pairs(sh, 0.5, max_docs=50).count() >= 0
 
 
+def test_refused_exact_pairs_leave_no_cache(spark):
+    """A refused ``max_docs`` guard must release the shingle persist it
+    made for the guard pass: the persistent-RDD count is unchanged, and
+    a caller's own cache survives the refusal."""
+    import pytest
+
+    docs = spark.range(0, 20).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("alpha beta gamma delta "), F.col("id")).alias("text"),
+    )
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return jsc.getPersistentRDDs().size()
+
+    for op in (dedup.jaccard_pairs, dedup.containment_pairs):
+        sh = dedup.shingles(docs)
+        before = persisted()
+        with pytest.raises(ValueError, match="cap|capped"):
+            op(sh, 0.5, max_docs=5)
+        assert persisted() == before, op.__name__
+        owned = dedup.shingles(docs).persist()
+        owned.count()
+        with pytest.raises(ValueError):
+            op(owned, 0.5, max_docs=5)
+        assert owned.is_cached, op.__name__
+        owned.unpersist(blocking=True)
+
+
 def test_minhash_lsh_recall_vs_exact_at_catalog_params(spark):
     """The SRP-side weak-gap honesty treatment applied to the text LSH:
     measured recall of the catalog MinHash config (k=8, bands of 2,

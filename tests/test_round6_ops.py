@@ -372,6 +372,29 @@ class TestChannelAcf:
         pts = {r.channel: r.n_points for r in out}
         assert pts["c"] > pts["d"]
 
+    def test_pre_1970_input_matches_shifted_output(self, spark):
+        """A negative grid bound once rendered as ``pmod(--…L)``, and
+        ``--`` starts a SQL comment. Shifting the input by -1e18 ns (a
+        whole number of periods, so the grid aligns the same way) must
+        leave every (channel, lag) result unchanged, with or without the
+        collected-bounds guard."""
+        from cassandra_pv_archiver_spark.operators.stats import channel_acf
+
+        NS = 1_000_000_000
+        shift = -10**18
+        rows = [("c", h * 100 * NS, float(h % 3), 0, 0) for h in range(12)] + [
+            ("d", (5 + h) * 100 * NS, float(h % 2), 0, 0) for h in range(7)
+        ]
+        moved = [(c, t + shift, v, s, st) for c, t, v, s, st in rows]
+        for bound in (50_000_000, None):
+            want = sorted(map(tuple, channel_acf(
+                _samples(spark, rows), 100, [100, 200], max_grid_work=bound
+            ).collect()))
+            got = sorted(map(tuple, channel_acf(
+                _samples(spark, moved), 100, [100, 200], max_grid_work=bound
+            ).collect()))
+            assert want and got == want
+
 
 class TestChannelTrend:
     def test_exact_line_recovers_slope(self, spark):
